@@ -12,8 +12,10 @@ drives it (EventEventRelationClassifier.predict, lines 274-314):
 * the predicted label value v maps to the pipeline's string label via
   ``label_names[v-1]`` (EventEventRelationClassifier.java:307).
 
-Prediction is a single numpy matmul, so at the Spark layer this runs inside
-an Arrow-batched pandas UDF over the broadcast (W, labels) pair.
+Prediction is one vectorised numpy pass per matrix that sums w·x in
+feature-index order, as liblinear-java does, so decision values are
+bit-identical on any CPU. At the Spark layer it runs inside the
+Arrow-batched per-document map over the module-cached (W, labels) pair.
 """
 
 from __future__ import annotations
@@ -43,10 +45,20 @@ class LinearModel:
         self.w = w                    # (nr_feature [+1 if bias>=0], nr_class)
 
     def predict_values(self, X: np.ndarray) -> np.ndarray:
-        """Decision values, columns in model-label order."""
+        """Decision values, columns in model-label order.
+
+        liblinear-java adds w·x one feature at a time in index order. A
+        BLAS matmul sums in an order that depends on the CPU's kernel, so
+        the products of the nonzero columns are summed with
+        ``np.add.accumulate`` along the feature axis instead: the same
+        order, hence the same float64 result, on any CPU."""
         n = self.nr_feature + (1 if self.bias >= 0 else 0)
-        used = min(X.shape[1], n)
-        return X[:, :used] @ self.w[:used]
+        X = X[:, :min(X.shape[1], n)]
+        nz = np.flatnonzero(X.any(axis=0))
+        if nz.size == 0:
+            return np.zeros((X.shape[0], self.w.shape[1]))
+        terms = X[:, nz, None] * self.w[nz]
+        return np.add.accumulate(terms, axis=1, out=terms)[:, -1]
 
     def predict_label_values(self, X: np.ndarray) -> np.ndarray:
         """Numeric label values (ties -> first label column, as liblinear)."""

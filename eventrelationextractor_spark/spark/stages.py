@@ -6,10 +6,13 @@ Execution design (SURVEY.md §1.4, §4):
   one document, so extraction is a pure ``mapInPandas`` over the pages
   scan: zero shuffles, linear scaling with executors. No groupBy is needed
   because no cross-document state exists until canonicalization.
-* All Python work is Arrow-batched; the per-document core
-  (eventrelationextractor_spark.core) is pure Python/numpy and is loaded
-  once per executor (lexicons and liblinear weights are module-level
-  caches, equivalent to a broadcast of a few hundred KB).
+* Every extractor is one ``emit(url, doc, *extra)`` function run by the
+  same per-document map (``_map_docs``): page generation for bare doc_id
+  frames fused in (``_page_source``), a one-time lexicon load per task,
+  ``parse_page``, then ``emit``; each Arrow batch is built column-wise.
+  The per-document core (eventrelationextractor_spark.core) is pure
+  Python/numpy; lexicons and liblinear weights are module-level caches,
+  equivalent to a broadcast of a few hundred KB.
 * Column pruning: only (url, text) are read; Catalyst prunes ``html``
   (binary) at the parquet/Iceberg scan - verified via
   ``explain_scan_pruning`` in tests.
@@ -17,10 +20,25 @@ Execution design (SURVEY.md §1.4, §4):
   whose timex count exceeds ``max_timex_pairs_per_doc`` are truncated with
   a lineage warning rather than stalling a task (skew guard, SURVEY.md
   §7.1 step 8).
+
+Error policy: one malformed page never fails a task. A page whose parse
+or emit raises contributes none of its rows (each document's rows are
+materialised before any is kept). Stages with ``TRIPLE_SCHEMA`` output
+emit exactly one meta row for it instead, so the lineage pred_histogram
+counts failures per bucket:
+
+* parse failure: ``(url, "_doc", "PARSE_ERROR", "_doc", "parse-error",
+  "meta")``;
+* failure after parse: ``(url, "_doc", "EXTRACT_ERROR", <exception class
+  name>, "extract-error", "meta")``.
+
+In the salted giant-page path only copy 0 of a page emits that row. Every
+other stage drops the failing page.
 """
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterator
 
 from pyspark.sql import DataFrame
@@ -28,8 +46,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
+from ..core import features
+from ..core.deps import token_attr
 from ..core.docmodel import (FIELDS_FILE24, FIELDS_FILE28, FIELDS_TEXT16,
                              FIELDS_TEXT18, DocState, parse_txp_lines)
+from ..core.lexicons import load_lexicons
+from ..core.pipeline import (_candidate_groups, causal_triples,
+                             ee_clf_probabilities, temporal_triples)
+from ..core.timegraph import filter_consistent
 
 TRIPLE_SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -95,7 +119,7 @@ def _repartition_for_cpu(df: DataFrame) -> DataFrame:
     return df
 
 
-def _page_source(pages: DataFrame):
+def _page_source(pages: DataFrame, extra: tuple = ()):
     """(df, batch-transform) for a page source that is either a real pages
     table (has a ``text`` column) or a bare ``doc_id`` frame.
 
@@ -105,7 +129,7 @@ def _page_source(pages: DataFrame):
     workers (the JVM pipes one runner into the next), doubling the worker
     pool and paying an extra Arrow round-trip of the full page text."""
     if "text" in pages.columns:
-        return pages.select("url", "text"), (lambda batches: batches)
+        return pages.select("url", "text", *extra), (lambda batches: batches)
 
     from ..datagen import synth_page
     ids = _repartition_for_cpu(
@@ -119,6 +143,67 @@ def _page_source(pages: DataFrame):
                                 "text": [p["text"] for p in pg]})
 
     return ids, gen
+
+
+def _error_row(url, doc, exc) -> tuple:
+    """The TRIPLE_SCHEMA meta row for a page that failed (module docstring)."""
+    if doc is None:
+        return (url, "_doc", "PARSE_ERROR", "_doc", "parse-error", "meta")
+    return (url, "_doc", "EXTRACT_ERROR", type(exc).__name__,
+            "extract-error", "meta")
+
+
+def _doc_batches(schema: StructType, emit, extra: tuple = (), report=None):
+    """The batch function of the per-document map: pandas frames of
+    (url, text, *extra) in, frames of ``schema`` out. ``emit(url, doc,
+    *extra)`` yields one document's rows as tuples in schema order.
+    ``report(*extra)`` says whether this input row of a failing page
+    emits the error row (default: every row); it only matters for
+    ``TRIPLE_SCHEMA``."""
+    names = schema.fieldNames()
+    error_rows = schema is TRIPLE_SCHEMA
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+        load_lexicons()   # once per task, before the first document
+        for pdf in batches:
+            cols = [[] for _ in names]
+            for url, text, *more in zip(pdf["url"], pdf["text"],
+                                        *(pdf[c] for c in extra)):
+                doc = None
+                try:
+                    doc = parse_page(text, url)
+                    rows = list(emit(url, doc, *more))
+                except Exception as exc:
+                    if not error_rows or (report is not None
+                                          and not report(*more)):
+                        continue
+                    rows = [_error_row(url, doc, exc)]
+                for col, values in zip(cols, zip(*rows)):
+                    col.extend(values)
+            yield pd.DataFrame(dict(zip(names, cols)))
+
+    return run
+
+
+def _map_docs(pages: DataFrame, schema: StructType, emit, extra: tuple = (),
+              report=None) -> DataFrame:
+    """Run ``emit`` over every page of ``pages`` (a pages table or a bare
+    doc_id frame, see _page_source): the one per-document map of all the
+    extractors below."""
+    cols, gen_pages = _page_source(pages, extra)
+    run = _doc_batches(schema, emit, extra, report)
+    return cols.mapInPandas(lambda batches: run(gen_pages(batches)),
+                            schema=schema)
+
+
+def _triple_rows(url, trips) -> list:
+    return [(url, t.source, t.rel, t.target, t.stage, t.pair_type)
+            for t in trips]
+
+
+def _has_token(doc: DocState, m) -> bool:
+    return m.start_tok != "O" and m.start_tok in doc.tokens
 
 
 def extract_triples(pages: DataFrame, mode: str = "both",
@@ -146,67 +231,34 @@ def extract_triples(pages: DataFrame, mode: str = "both",
 
     ``pages`` may be a bare doc_id frame: the synthetic page is then
     generated in the same UDF (see _page_source)."""
-    cols, gen_pages = _page_source(pages)
-
-    def run(batches: Iterator) -> Iterator:
-        # heavy imports inside the UDF so the driver plan stays light
-        import pandas as pd
-
-        from ..core.lexicons import load_lexicons
-        from ..core.pipeline import causal_triples, temporal_triples
-        from ..core.timegraph import filter_consistent
+    def emit(url, doc):
         lx = load_lexicons()
-        for pdf in gen_pages(batches):
-            out = {"url": [], "subj": [], "pred": [], "obj": [],
-                   "stage": [], "pair_type": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    # malformed page: emit a meta row instead of vanishing
-                    # silently - the lineage pred_histogram then reports
-                    # parse failures per bucket
-                    out["url"].append(url)
-                    out["subj"].append("_doc")
-                    out["pred"].append("PARSE_ERROR")
-                    out["obj"].append("_doc")
-                    out["stage"].append("parse-error")
-                    out["pair_type"].append("meta")
-                    continue
-                trips = []
-                temporal = None
-                if mode in ("temporal", "both"):
-                    temporal = temporal_triples(
-                        doc, lx, max_timexes=max_timexes_per_doc)
-                    if consistent_only:
-                        ordered = sorted((t.source, t.target, t.rel)
-                                         for t in temporal)
-                        kept, _ = filter_consistent(ordered)
-                        keep = set(kept)
-                        temporal = [t for t in temporal
-                                    if (t.source, t.target, t.rel) in keep]
-                    trips += temporal
-                if mode in ("causal", "both"):
-                    tlinks_map = None
-                    if causal_tlinks_from_temporal and temporal is not None:
-                        tlinks_map = {t.source + "," + t.target: t.rel
-                                      for t in temporal}
-                    trips += causal_triples(doc, tlinks_map=tlinks_map,
-                                            lexicons=lx)
-                if doc.memo.get("tt_truncated"):
-                    from ..core.pipeline import Triple
-                    trips.append(Triple("_doc", "_doc", "TRUNCATED",
-                                        "tt-truncated", "meta"))
-                for t in trips:
-                    out["url"].append(url)
-                    out["subj"].append(t.source)
-                    out["pred"].append(t.rel)
-                    out["obj"].append(t.target)
-                    out["stage"].append(t.stage)
-                    out["pair_type"].append(t.pair_type)
-            yield pd.DataFrame(out)
+        trips = []
+        temporal = None
+        if mode in ("temporal", "both"):
+            temporal = temporal_triples(doc, lx,
+                                        max_timexes=max_timexes_per_doc)
+            if consistent_only:
+                ordered = sorted((t.source, t.target, t.rel)
+                                 for t in temporal)
+                kept, _ = filter_consistent(ordered)
+                keep = set(kept)
+                temporal = [t for t in temporal
+                            if (t.source, t.target, t.rel) in keep]
+            trips += temporal
+        if mode in ("causal", "both"):
+            tlinks_map = None
+            if causal_tlinks_from_temporal and temporal is not None:
+                tlinks_map = {t.source + "," + t.target: t.rel
+                              for t in temporal}
+            trips += causal_triples(doc, tlinks_map=tlinks_map, lexicons=lx)
+        rows = _triple_rows(url, trips)
+        if doc.memo.get("tt_truncated"):
+            rows.append((url, "_doc", "TRUNCATED", "_doc", "tt-truncated",
+                         "meta"))
+        return rows
 
-    return cols.mapInPandas(run, schema=TRIPLE_SCHEMA)
+    return _map_docs(pages, TRIPLE_SCHEMA, emit)
 
 
 def extract_triples_salted(pages: DataFrame, mode: str = "both",
@@ -237,80 +289,35 @@ def extract_triples_salted(pages: DataFrame, mode: str = "both",
                          F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
              .repartition("url", "salt"))
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from ..core.lexicons import load_lexicons
-        from ..core.pipeline import causal_triples, temporal_triples
+    def emit(url, doc, s):
         lx = load_lexicons()
-        for pdf in batches:
-            out = {"url": [], "subj": [], "pred": [], "obj": [],
-                   "stage": [], "pair_type": []}
-            for url, text, s in zip(pdf["url"], pdf["text"], pdf["salt"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    if int(s) == 0:  # one meta row per page, not per copy
-                        out["url"].append(url)
-                        out["subj"].append("_doc")
-                        out["pred"].append("PARSE_ERROR")
-                        out["obj"].append("_doc")
-                        out["stage"].append("parse-error")
-                        out["pair_type"].append("meta")
-                    continue
-                trips = []
-                if mode in ("temporal", "both"):
-                    trips += temporal_triples(
-                        doc, lx, max_timexes=max_timexes_per_doc,
-                        pair_slice=(int(s), salt))
-                if int(s) == 0 and mode in ("causal", "both"):
-                    trips += causal_triples(doc, lexicons=lx)
-                for t in trips:
-                    out["url"].append(url)
-                    out["subj"].append(t.source)
-                    out["pred"].append(t.rel)
-                    out["obj"].append(t.target)
-                    out["stage"].append(t.stage)
-                    out["pair_type"].append(t.pair_type)
-            yield pd.DataFrame(out)
+        trips = []
+        if mode in ("temporal", "both"):
+            trips += temporal_triples(
+                doc, lx, max_timexes=max_timexes_per_doc,
+                pair_slice=(int(s), salt))
+        if int(s) == 0 and mode in ("causal", "both"):
+            trips += causal_triples(doc, lexicons=lx)
+        return _triple_rows(url, trips)
 
-    return normal.unionByName(giant.mapInPandas(run, schema=TRIPLE_SCHEMA))
+    # one meta row per failing page, not per copy
+    return normal.unionByName(_map_docs(giant, TRIPLE_SCHEMA, emit,
+                                        extra=("salt",),
+                                        report=lambda s: s == 0))
 
 
 def extract_mentions(pages: DataFrame) -> DataFrame:
     """pages -> mention table (for entity linking / canonicalization)."""
-    cols, gen_pages = _page_source(pages)
+    def emit(url, doc):
+        for mid, m in doc.entities.items():
+            has_tok = _has_token(doc, m)
+            yield (url, mid, m.kind, m.sent_id, m.idx,
+                   token_attr(doc, m, "token") if has_tok else None,
+                   token_attr(doc, m, "lemma") if has_tok else None,
+                   m.ev_class, m.tmx_type, m.tmx_value,
+                   "TRUE" if m.is_dct else "FALSE")
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from ..core.deps import token_attr
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in MENTION_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                for mid, m in doc.entities.items():
-                    rows["url"].append(url)
-                    rows["mention_id"].append(mid)
-                    rows["kind"].append(m.kind)
-                    rows["sent_id"].append(m.sent_id)
-                    rows["ent_idx"].append(m.idx)
-                    if m.start_tok != "O" and m.start_tok in doc.tokens:
-                        rows["surface"].append(token_attr(doc, m, "token"))
-                        rows["lemma"].append(token_attr(doc, m, "lemma"))
-                    else:
-                        rows["surface"].append(None)
-                        rows["lemma"].append(None)
-                    rows["ev_class"].append(m.ev_class)
-                    rows["tmx_type"].append(m.tmx_type)
-                    rows["tmx_value"].append(m.tmx_value)
-                    rows["is_dct"].append("TRUE" if m.is_dct else "FALSE")
-            yield pd.DataFrame(rows)
-
-    return cols.mapInPandas(run, schema=MENTION_SCHEMA)
+    return _map_docs(pages, MENTION_SCHEMA, emit)
 
 
 TOKEN_SCHEMA = StructType([
@@ -348,31 +355,12 @@ def extract_candidates(pages: DataFrame) -> DataFrame:
     dropped (F2), split into E-DCT / E-T / E-E streams (F1, F3), canonical
     pair ordering applied (R7: EE doc-order swap + invert, ET event
     first). This is exactly the frame the sieve cascade consumes."""
-    cols, gen_pages = _page_source(pages)
+    def emit(url, doc):
+        for ptype, group in zip(("ed", "et", "ee"), _candidate_groups(doc)):
+            for e1, e2, label in group:
+                yield (url, e1.mid, e2.mid, ptype, label)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from ..core.pipeline import _candidate_groups
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in CANDIDATE_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
-                for ptype, group in (("ed", dct_pairs), ("et", et_pairs),
-                                     ("ee", ee_pairs)):
-                    for e1, e2, label in group:
-                        rows["url"].append(url)
-                        rows["source_id"].append(e1.mid)
-                        rows["target_id"].append(e2.mid)
-                        rows["pair_type"].append(ptype)
-                        rows["gold_rel"].append(label)
-            yield pd.DataFrame(rows)
-
-    return cols.mapInPandas(run, schema=CANDIDATE_SCHEMA)
+    return _map_docs(pages, CANDIDATE_SCHEMA, emit)
 
 
 PROB_SCHEMA = StructType([
@@ -390,31 +378,11 @@ def extract_ee_probabilities(pages: DataFrame) -> DataFrame:
     probabilities for the classifier-bound EE pairs (see
     core.pipeline.ee_clf_probabilities). Pure map stage like the other
     extractors - one row per (pair, model class)."""
-    cols, gen_pages = _page_source(pages)
+    def emit(url, doc):
+        for row in ee_clf_probabilities(doc, load_lexicons()):
+            yield (url, *row)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from ..core.lexicons import load_lexicons
-        from ..core.pipeline import ee_clf_probabilities
-        lx = load_lexicons()
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in PROB_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                for s, t, name, dec, prob in ee_clf_probabilities(doc, lx):
-                    rows["url"].append(url)
-                    rows["source_id"].append(s)
-                    rows["target_id"].append(t)
-                    rows["label"].append(name)
-                    rows["dec"].append(dec)
-                    rows["prob"].append(prob)
-            yield pd.DataFrame(rows)
-
-    return cols.mapInPandas(run, schema=PROB_SCHEMA)
+    return _map_docs(pages, PROB_SCHEMA, emit)
 
 
 def extract_tokens(pages: DataFrame) -> DataFrame:
@@ -424,40 +392,17 @@ def extract_tokens(pages: DataFrame) -> DataFrame:
     statistics, token-level exports) get the columnar form without
     re-parsing; deps keep the reference's cell encoding so the table
     round-trips to TXP."""
-    cols, gen_pages = _page_source(pages)
+    def emit(url, doc):
+        for tid in doc.token_arr:
+            t = doc.tokens[tid]
+            yield (url, t.idx, t.tid, t.sent_id, t.text, t.lemma, t.pos,
+                   t.main_pos, t.chunk, t.tense, t.aspect, t.pol,
+                   "mainVb" if t.main_verb else "O",
+                   "||".join(f"{k}:{t.deps[k]}" for k in t.dep_order)
+                   if t.deps else "O",
+                   t.ev_id, t.tmx_id)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in TOKEN_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                for tid in doc.token_arr:
-                    t = doc.tokens[tid]
-                    rows["url"].append(url)
-                    rows["tok_idx"].append(t.idx)
-                    rows["tok_id"].append(t.tid)
-                    rows["sent_id"].append(t.sent_id)
-                    rows["text"].append(t.text)
-                    rows["lemma"].append(t.lemma)
-                    rows["pos"].append(t.pos)
-                    rows["main_pos"].append(t.main_pos)
-                    rows["chunk"].append(t.chunk)
-                    rows["tense"].append(t.tense)
-                    rows["aspect"].append(t.aspect)
-                    rows["pol"].append(t.pol)
-                    rows["main_verb"].append("mainVb" if t.main_verb else "O")
-                    rows["deps"].append(
-                        "||".join(f"{k}:{t.deps[k]}" for k in t.dep_order)
-                        if t.deps else "O")
-                    rows["ev_id"].append(t.ev_id)
-                    rows["tmx_id"].append(t.tmx_id)
-            yield pd.DataFrame(rows)
-
-    return cols.mapInPandas(run, schema=TOKEN_SCHEMA)
+    return _map_docs(pages, TOKEN_SCHEMA, emit)
 
 
 def extracted_text(pages: DataFrame) -> DataFrame:
@@ -466,35 +411,22 @@ def extracted_text(pages: DataFrame) -> DataFrame:
     Detokenization reproduces the reference's escaping rules
     (TempEval3TaskABC.java:284-292): PTB bracket escapes back to literal
     brackets, double-backtick/quote pairs back to '"'."""
-    cols, gen_pages = _page_source(pages)
     schema = StructType([StructField("url", StringType(), False),
                          StructField("extracted_text", StringType(), False),
                          StructField("sha256", StringType(), False)])
 
-    def run(batches: Iterator) -> Iterator:
-        import hashlib
+    def emit(url, doc):
+        extracted = " ".join(
+            doc.tokens[tid].text
+            .replace("-LRB-", "(").replace("-RRB-", ")")
+            .replace("-LCB-", "{").replace("-RCB-", "}")
+            .replace("-LSB-", "[").replace("-RSB-", "]")
+            .replace("``", '"').replace("''", '"')
+            for tid in doc.token_arr)
+        yield (url, extracted,
+               hashlib.sha256(extracted.encode("utf-8")).hexdigest())
 
-        import pandas as pd
-        for pdf in gen_pages(batches):
-            out = {"url": [], "extracted_text": [], "sha256": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                doc = parse_page(text, url)
-                words = []
-                for tid in doc.token_arr:
-                    w = doc.tokens[tid].text
-                    w = (w.replace("-LRB-", "(").replace("-RRB-", ")")
-                          .replace("-LCB-", "{").replace("-RCB-", "}")
-                          .replace("-LSB-", "[").replace("-RSB-", "]")
-                          .replace("``", '"').replace("''", '"'))
-                    words.append(w)
-                extracted = " ".join(words)
-                out["url"].append(url)
-                out["extracted_text"].append(extracted)
-                out["sha256"].append(
-                    hashlib.sha256(extracted.encode("utf-8")).hexdigest())
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(run, schema=schema)
+    return _map_docs(pages, schema, emit)
 
 
 def synth_pages_df(spark, n_docs: int, partitions: int | None = None) -> DataFrame:
@@ -554,52 +486,23 @@ def extract_kg_rows(pages: DataFrame, mode: str = "temporal",
     per run, TempRelPro.java:133,181,229 - exactly the waste we avoid).
     Downstream splits by ``row_kind`` after a localCheckpoint, so the
     corpus is scanned and parsed exactly once."""
-    cols, gen_pages = _page_source(pages)
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from ..core.deps import token_attr
-        from ..core.lexicons import load_lexicons
-        from ..core.pipeline import causal_triples, temporal_triples
+    def emit(url, doc):
         lx = load_lexicons()
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in KG_ROW_SCHEMA.fields}
+        rows = [(url, "mention", mid, m.kind,
+                 token_attr(doc, m, "lemma") if _has_token(doc, m) else None,
+                 None, None, None)
+                for mid, m in doc.entities.items()]
+        trips = []
+        if mode in ("temporal", "both"):
+            trips += temporal_triples(doc, lx,
+                                      max_timexes=max_timexes_per_doc)
+        if mode in ("causal", "both"):
+            trips += causal_triples(doc, lexicons=lx)
+        rows += [(url, "triple", None, None, None, t.source, t.rel, t.target)
+                 for t in trips]
+        return rows
 
-            def emit(url, row_kind, mention_id=None, kind=None, lemma=None,
-                     subj=None, pred=None, obj=None):
-                rows["url"].append(url)
-                rows["row_kind"].append(row_kind)
-                rows["mention_id"].append(mention_id)
-                rows["kind"].append(kind)
-                rows["lemma"].append(lemma)
-                rows["subj"].append(subj)
-                rows["pred"].append(pred)
-                rows["obj"].append(obj)
-
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                for mid, m in doc.entities.items():
-                    lemma = (token_attr(doc, m, "lemma")
-                             if m.start_tok != "O" and m.start_tok in doc.tokens
-                             else None)
-                    emit(url, "mention", mention_id=mid, kind=m.kind,
-                         lemma=lemma)
-                trips = []
-                if mode in ("temporal", "both"):
-                    trips += temporal_triples(doc, lx,
-                                              max_timexes=max_timexes_per_doc)
-                if mode in ("causal", "both"):
-                    trips += causal_triples(doc, lexicons=lx)
-                for t in trips:
-                    emit(url, "triple", subj=t.source, pred=t.rel,
-                         obj=t.target)
-            yield pd.DataFrame(rows)
-
-    return cols.mapInPandas(run, schema=KG_ROW_SCHEMA)
+    return _map_docs(pages, KG_ROW_SCHEMA, emit)
 
 
 FEATURE_EXPORT_SCHEMA = StructType([
@@ -624,43 +527,17 @@ def export_training_features(pages: DataFrame,
     only on gold-labeled pairs - the label column's 0/NONE rows are test
     candidates, never training rows): applied as a DataFrame filter so
     Catalyst can combine it with downstream predicates."""
-    cols, gen_pages = _page_source(pages)
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from ..core import features
-        from ..core.lexicons import load_lexicons
-        from ..core.pipeline import _candidate_groups
+    def emit(url, doc):
         lx = load_lexicons()
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in FEATURE_EXPORT_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
-                groups = (
-                    ("dct", dct_pairs,
-                     lambda e1, e2, lb: features.et_vector(doc, e1, e2, lb, False)),
-                    ("et", et_pairs,
-                     lambda e1, e2, lb: features.et_vector(doc, e1, e2, lb, False)),
-                    ("ee", ee_pairs,
-                     lambda e1, e2, lb: features.ee_vector(doc, e1, e2, lb, lx)),
-                )
-                for gname, pairs, build in groups:
-                    for e1, e2, lb in pairs:
-                        vec = build(e1, e2, lb)
-                        rows["url"].append(url)
-                        rows["group"].append(gname)
-                        rows["src"].append(e1.mid)
-                        rows["tgt"].append(e2.mid)
-                        rows["label"].append(int(vec[-1]))
-                        rows["libsvm"].append(features.to_libsvm(vec))
-            yield pd.DataFrame(rows)
+        for gname, pairs in zip(("dct", "et", "ee"), _candidate_groups(doc)):
+            for e1, e2, lb in pairs:
+                vec = (features.ee_vector(doc, e1, e2, lb, lx)
+                       if gname == "ee" else
+                       features.et_vector(doc, e1, e2, lb, False))
+                yield (url, gname, e1.mid, e2.mid, int(vec[-1]),
+                       features.to_libsvm(vec))
 
-    out = cols.mapInPandas(run, schema=FEATURE_EXPORT_SCHEMA)
+    out = _map_docs(pages, FEATURE_EXPORT_SCHEMA, emit)
     if labeled_only:
         out = out.filter(F.col("label") != 0)   # F4
     return out

@@ -174,6 +174,29 @@ def test_predict_probabilities_liblinear_semantics():
     assert p[0] == 1.0 / (1.0 + np.exp(-0.7)) and p[1] == 1.0 - p[0]
 
 
+def test_predict_values_sums_in_feature_order():
+    """Decision values equal liblinear-java's sum: w·x added one nonzero
+    feature at a time in index order, starting from 0.0, over features
+    up to nr_feature (+1 with a bias) - exactly, on any CPU."""
+    import numpy as np
+
+    from eventrelationextractor_spark.core.liblinear import shipped_model
+
+    rng = np.random.default_rng(7)
+    for name in ("dct", "et", "ee", "causal"):
+        m = shipped_model(name)
+        n = m.nr_feature + (1 if m.bias >= 0 else 0)
+        X = (rng.random((12, n + 5)) < 0.1) * rng.choice([1.0, 0.5, 3.0],
+                                                          (12, n + 5))
+        got = m.predict_values(X)
+        for i in range(X.shape[0]):
+            for c in range(m.w.shape[1]):
+                acc = 0.0
+                for j in np.flatnonzero(X[i, :n]):
+                    acc += m.w[j, c] * X[i, j]
+                assert got[i, c] == acc, (name, i, c)
+
+
 def test_ee_probability_oracle_constants():
     """Anti-drift: the decision-value constants embedded in the
     kg_ee_probabilities SQL oracle (__spark_entry__._EE_PROB_CONSTS) must

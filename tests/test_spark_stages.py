@@ -5,9 +5,12 @@ import os
 import time
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from eventrelationextractor_spark import fixtures as fx
+from eventrelationextractor_spark.datagen import synth_page
 from eventrelationextractor_spark.ops import events as ev_ops
 from eventrelationextractor_spark.spark import kg, lineage, stages
 
@@ -329,17 +332,187 @@ def test_salted_extraction_matches_plain(spark, fixture_pages):
     assert "hashpartitioning" in physical and "salt" in physical
 
 
+def _cascade_failure_text() -> str:
+    """synth_page(43) with the sentence-id cell of line 12 set to
+    B-TIMEX3: the page parses, then the temporal cascade raises
+    ValueError ('tmx1' is not in list, core/eventrules.py)."""
+    lines = synth_page(43)["text"].split("\n")
+    cells = lines[12].split("\t")
+    cells[2] = "B-TIMEX3"
+    lines[12] = "\t".join(cells)
+    return "\n".join(lines)
+
+
 def test_parse_failure_emits_meta_row(spark):
     """A malformed page must surface as a PARSE_ERROR meta row (feeding
-    the lineage pred_histogram), not vanish silently."""
+    the lineage pred_histogram), not vanish silently. A page that parses
+    but then raises inside the sieve cascade surfaces as one
+    EXTRACT_ERROR row instead of failing the job."""
     good = fx.fixture_pages(("sample_temporal",))[0]
     pages = spark.createDataFrame(
-        [("u-bad", None), ("u-good", good["text"])], "url string, text string")
+        [("u-bad", None), ("u-good", good["text"]),
+         ("u-cascade", _cascade_failure_text())], "url string, text string")
     rows = stages.extract_triples(pages, "temporal").collect()
     bad = [r for r in rows if r.url == "u-bad"]
     assert len(bad) == 1 and bad[0].pred == "PARSE_ERROR" \
         and bad[0].pair_type == "meta"
     assert sum(1 for r in rows if r.url == "u-good") == 14
+    assert [tuple(r) for r in rows if r.url == "u-cascade"] == [
+        ("u-cascade", "_doc", "EXTRACT_ERROR", "ValueError",
+         "extract-error", "meta")]
+    want = {(s, p, o) for _, s, p, o in
+            fx.golden_predictions("sample_temporal", "temporal")}
+    assert {(r.subj, r.pred, r.obj) for r in rows
+            if r.url == "u-good"} == want
+
+
+@pytest.fixture(scope="module")
+def doc_batch_fns(spark):
+    """extractor name -> the batch function it hands to mapInPandas,
+    captured while the plan is built, so tests can call it on pandas
+    frames without running a Spark job."""
+    captured = []
+
+    def capture(df, func, schema, *args, **kwargs):
+        captured.append(func)
+        return df.sparkSession.createDataFrame([], schema)
+
+    pages = spark.createDataFrame([], "url string, text string")
+    builds = {
+        "triples": lambda p: stages.extract_triples(p, "both"),
+        "triples_consistent": lambda p: stages.extract_triples(
+            p, "both", causal_tlinks_from_temporal=True,
+            consistent_only=True),
+        # the giant-page branch is built last; its rows carry a salt
+        "salted": lambda p: stages.extract_triples_salted(p, "both", salt=2),
+        "mentions": stages.extract_mentions,
+        "candidates": stages.extract_candidates,
+        "ee_probabilities": stages.extract_ee_probabilities,
+        "tokens": stages.extract_tokens,
+        "extracted_text": stages.extracted_text,
+        "kg_rows": lambda p: stages.extract_kg_rows(p, mode="both"),
+        "features": stages.export_training_features,
+    }
+    fns = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(type(pages), "mapInPandas", capture)
+        for name, build in builds.items():
+            build(pages)
+            fns[name] = captured[-1]
+    fns["lazy_kg_rows"] = stages._doc_batches(stages.KG_ROW_SCHEMA,
+                                              _lazy_kg_emit)
+    return fns
+
+
+def _lazy_kg_emit(url, doc):
+    """extract_kg_rows' rows from a generator: mention rows are yielded
+    before the cascade can raise, so only the runner keeps them out."""
+    from eventrelationextractor_spark.core.pipeline import (causal_triples,
+                                                            temporal_triples)
+    for mid, m in doc.entities.items():
+        yield (url, "mention", mid, m.kind, None, None, None, None)
+    for t in temporal_triples(doc) + causal_triples(doc):
+        yield (url, "triple", None, None, None, t.source, t.rel, t.target)
+
+
+def _run_batch(fn, pages, salt=None) -> list:
+    import pandas as pd
+    pdf = pd.DataFrame({"url": [u for u, _ in pages],
+                        "text": [t for _, t in pages]})
+    if salt is not None:
+        pdf["salt"] = salt
+    return [tuple(r) for out in fn(iter([pdf]))
+            for r in out.itertuples(index=False)]
+
+
+@st.composite
+def _mutated_pages(draw):
+    """1-3 synthetic pages with one cell each replaced, maybe a None text."""
+    pages = []
+    for i in range(draw(st.integers(1, 3))):
+        lines = synth_page(draw(st.integers(0, 59)))["text"].split("\n")
+        li = draw(st.integers(0, len(lines) - 1))
+        cells = lines[li].split("\t")
+        ci = draw(st.integers(0, len(cells) - 1))
+        cells[ci] = draw(st.sampled_from(
+            ["B-TIMEX3", "I-TIMEX3", "B-EVENT", "O", "", "1", "-1", "t1",
+             "e1", "tmx1", "tmx0", "DATE", "BEFORE", "x\ty"]))
+        lines[li] = "\t".join(cells)
+        pages.append((f"u{i}", "\n".join(lines)))
+    if draw(st.booleans()):
+        pages.append(("u-none", None))
+    return pages
+
+
+def _cascade_status(text):
+    """(failure, exception class) of the full triple cascade on one page,
+    from direct core calls: failure is None, 'parse', 'temporal' or
+    'causal'."""
+    from eventrelationextractor_spark.core.pipeline import (causal_triples,
+                                                            temporal_triples)
+    try:
+        doc = stages.parse_page(text, "u")
+    except Exception as exc:
+        return "parse", type(exc).__name__
+    for failure, cascade in (("temporal", temporal_triples),
+                             ("causal", causal_triples)):
+        try:
+            cascade(doc)
+        except Exception as exc:
+            return failure, type(exc).__name__
+    return None, None
+
+
+_ERROR_PREDS = ("PARSE_ERROR", "EXTRACT_ERROR")
+
+
+@given(pages=_mutated_pages())
+@example(pages=[("u0", _cascade_failure_text()), ("u-none", None)])
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_doc_runner_isolates_failing_pages(doc_batch_fns, pages):
+    """Every extractor's batch function survives any single-cell mutation
+    of a page: each page yields its own rows (the same as in a batch of
+    its own), or exactly one error row (triple schemas), or nothing; a
+    failing page never leaves partial rows."""
+    status = {u: _cascade_status(t) for u, t in pages}
+    for name, fn in doc_batch_fns.items():
+        if name == "salted":
+            continue
+        rows = _run_batch(fn, pages)
+        for url, text in pages:
+            mine = [r for r in rows if r[0] == url]
+            assert mine == _run_batch(fn, [(url, text)]), (name, url)
+            failure, cls = status[url]
+            if name.startswith("triples"):
+                errors = [r for r in mine if r[2] in _ERROR_PREDS]
+                assert not errors or mine == errors
+                assert len(errors) <= 1
+                if failure == "parse":
+                    assert mine == [(url, "_doc", "PARSE_ERROR", "_doc",
+                                     "parse-error", "meta")]
+            elif failure == "parse":
+                assert mine == [], (name, url)
+            if name == "triples" and failure is None:
+                assert all(r[2] not in _ERROR_PREDS for r in mine)
+            if name == "triples" and failure in ("temporal", "causal"):
+                assert mine == [(url, "_doc", "EXTRACT_ERROR", cls,
+                                 "extract-error", "meta")]
+            if name.endswith("kg_rows") and failure is not None:
+                assert mine == [], url   # its mention rows come first
+            if name == "ee_probabilities" and failure in ("parse",
+                                                          "temporal"):
+                assert mine == [], url
+    salted = doc_batch_fns["salted"]
+    for copy in (0, 1):
+        rows = _run_batch(salted, pages, salt=copy)
+        for url, _ in pages:
+            mine = [r for r in rows if r[0] == url]
+            errors = [r for r in mine if r[2] in _ERROR_PREDS]
+            assert len(errors) <= 1 and (not errors or mine == errors)
+            assert not errors or copy == 0
+            if copy == 0 and status[url][0] == "parse":
+                assert errors and errors[0][2] == "PARSE_ERROR"
 
 
 def test_streaming_triple_extraction_matches_batch(spark, tmp_path, fixture_pages):
